@@ -1,7 +1,10 @@
 package graft.meta
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.Try
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Governance manifest sidecar — the engine's dataset-stats surface.
@@ -9,10 +12,12 @@ import org.apache.spark.sql.functions._
   * Mirrors the reference's three-section manifest (CoreInfo /
   * DatasetInfo / SchemaStats dataclasses, app/utils/metadata.py:52-81,
   * assembled by write_metadata_from_df at :85-150), re-designed for
-  * Spark: the row count and ALL per-column null counts are computed in
-  * ONE aggregate job (partial + final hash agg; a single pass over the
-  * table regardless of column count), not N jobs — this is what keeps
-  * manifest generation viable at 100 TB.
+  * Spark: the row count and ALL per-column null counts are one set of
+  * aggregate expressions, not N jobs. For a frame that
+  * [[graft.sink.BronzeWriter]] wrote they ride the write itself as an
+  * observation, so the manifest costs no scan of its own; any other
+  * frame gets one aggregate scan ([[tableStats]]). The head-3 preview
+  * is one more job (one task on a single-file input).
   */
 final case class CoreInfo(
     fileName: String,
@@ -47,27 +52,72 @@ final case class Manifest(
 
 object Manifest {
 
-  /** Row count + per-column null counts in a single job
+  /** Row count + per-column null counts as aggregate expressions
     * (reference computes these separately: len(df) at
-    * app/utils/metadata.py:122, isna().sum() per column at :32-33).
+    * app/utils/metadata.py:122, isna().sum() per column at :32-33) —
+    * the one definition behind both [[tableStats]] and the observation
+    * on a bronze write. `count` of a null-only `when` never yields
+    * null, so an empty frame counts 0 everywhere.
     */
+  private def statsColumns(columns: Seq[String]): Seq[Column] =
+    count(lit(1)).as("__rows") +: columns.map(c =>
+      count(when(col(c).isNull, 1)).as(s"__nulls_$c"))
+
+  private def statsOf(columns: Seq[String], row: Row): (Long, Map[String, Long]) =
+    (row.getLong(0), columns.zipWithIndex.map { case (c, i) => c -> row.getLong(i + 1) }.toMap)
+
+  /** Row count + per-column null counts in one aggregate scan (under
+    * AQE its shuffle stage and its result stage run as two jobs; one
+    * job when the input is a single partition). */
   def tableStats(df: DataFrame): (Long, Map[String, Long]) = {
-    val nullAggs = df.columns.map(c =>
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nulls_$c"))
-    val row = df.agg(count(lit(1)).as("__rows"), nullAggs.toIndexedSeq: _*).head()
-    val rows = row.getAs[Long]("__rows")
-    val nulls = df.columns.map(c => c -> row.getAs[Long](s"__nulls_$c")).toMap
-    (rows, nulls)
+    val stats = statsColumns(df.columns.toIndexedSeq)
+    statsOf(df.columns.toIndexedSeq, df.agg(stats.head, stats.tail: _*).head())
   }
+
+  /** Bronze writes whose stats were observed: frame (weakly, by
+    * identity — Dataset keeps Object's equality) → written path →
+    * the observation that rode the write. Accessed under its monitor. */
+  private val observedWrites = new java.util.WeakHashMap[DataFrame, Map[String, Observation]]()
+
+  /** How long [[forWrittenFile]] waits for a recorded observation.
+    * Spark completes observations from a QueryExecutionListener on the
+    * listener bus, a few milliseconds after the write returns; past
+    * this bound the manifest falls back to [[tableStats]]. */
+  private val ObservationWait = 10.seconds
+
+  /** Run `write` (which returns the written path) on `df` with the
+    * manifest's stats observed, and once it succeeds record them for
+    * this (`df`, path) pair. The observation attaches here, at the
+    * write, not where the frame is built: an earlier action on the same
+    * frame (a `head(1)`, a preview) would complete it from a partial
+    * scan. */
+  private[graft] def observedWrite(df: DataFrame)(write: DataFrame => String): String = {
+    val observation = Observation()
+    val stats = statsColumns(df.columns.toIndexedSeq)
+    val path = write(df.observe(observation, stats.head, stats.tail: _*))
+    observedWrites.synchronized {
+      val byPath = Option(observedWrites.get(df)).getOrElse(Map.empty[String, Observation])
+      observedWrites.put(df, byPath + (path -> observation))
+    }
+    path
+  }
+
+  /** The observed stats of `df`'s write to `path`, if BronzeWriter made
+    * that write and Spark delivered its metrics within the bound. */
+  private def observedStats(df: DataFrame, path: String): Option[(Long, Map[String, Long])] =
+    observedWrites.synchronized(Option(observedWrites.get(df)).flatMap(_.get(path)))
+      .flatMap(o => Try(Await.result(o.future, ObservationWait)).toOption)
+      .map(statsOf(df.columns.toIndexedSeq, _))
 
   /** Dtype capture is metadata-only — no job
     * (reference app/utils/metadata.py:27-29). */
   def dtypes(df: DataFrame): Map[String, String] =
     df.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
 
-  /** Head-N preview as JSON records (reference app/utils/metadata.py:36-38). */
+  /** Head-N preview as JSON records (reference app/utils/metadata.py:36-38).
+    * `head` plans a CollectLimit: one job, no shuffle. */
   def preview(df: DataFrame, n: Int = 3): Seq[String] =
-    df.limit(n).toJSON.collect().toIndexedSeq
+    df.toJSON.head(n).toIndexedSeq
 
   /** Streaming MD5 over a file's bytes, 1 MiB chunks — constant memory
     * (reference _md5, app/utils/metadata.py:15-20) — via Hadoop FS so it
@@ -90,7 +140,10 @@ object Manifest {
     java.time.LocalDateTime.now(clock).truncatedTo(java.time.temporal.ChronoUnit.SECONDS)
       .format(java.time.format.DateTimeFormatter.ISO_LOCAL_DATE_TIME)
 
-  /** Assemble the full manifest for a written file + its DataFrame. */
+  /** Assemble the full manifest for a written file + its DataFrame.
+    * Rows and null counts come from the write's observation when
+    * BronzeWriter wrote exactly this frame to exactly this path, else
+    * from a [[tableStats]] scan. */
   def forWrittenFile(
       spark: SparkSession,
       df: DataFrame,
@@ -103,7 +156,7 @@ object Manifest {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) throw new java.io.FileNotFoundException(filePath)
     val status = fs.getFileStatus(p)
-    val (rows, nulls) = tableStats(df)
+    val (rows, nulls) = observedStats(df, filePath).getOrElse(tableStats(df))
     Manifest(
       core = CoreInfo(
         fileName = p.getName,

@@ -60,8 +60,11 @@ object ApiIngestion {
     * casts, and enforce both schema gates.
     */
   private def shape(raw: DataFrame, payloadCols: Seq[String], cfg: PipelineConfig): DataFrame = {
-    val present = payloadCols.filter(raw.columns.contains)
-    val projected = raw.select(present.map(col).toIndexedSeq: _*)
+    // an empty payload (`[]`) infers no columns at all; it lands with
+    // the payload's columns, all null, like a header-only file
+    val projected =
+      if (raw.columns.isEmpty) raw.select(payloadCols.map(c => lit(null).cast("string").as(c)): _*)
+      else raw.select(payloadCols.filter(raw.columns.contains).map(col): _*)
     val renamed = Casts.renameColumns(projected, cfg.schema.renameMap)
     Validate.ensureRequiredColumns(renamed, cfg.schema.requiredColumns.filter(renamed.columns.contains))
     val cast = Casts.applyCasts(

@@ -15,8 +15,10 @@ import graft.validate.Validate
   * gate → preview → partitioned bronze write → manifest sidecar.
   *
   * Unlike the reference, every step up to the write is LAZY plan
-  * construction — one Spark job materializes the write and one
-  * aggregate job computes the manifest stats.
+  * construction. An ingest runs three Spark jobs: the header read that
+  * names the columns, the bronze write — which also observes the
+  * manifest's row and null counts — and the manifest's head-3 preview
+  * (plus one for `showPreview`).
   */
 final case class IngestionResult(
     dataFile: String,

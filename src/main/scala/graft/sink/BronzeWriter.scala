@@ -1,9 +1,9 @@
 package graft.sink
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.config.SinkConfig
+import graft.meta.Manifest
 
 /** Hive-partitioned "bronze" landing writer.
   *
@@ -24,6 +24,11 @@ object BronzeWriter {
 
   /** Write one dated partition; returns the path of the written data
     * file (single-file mode) or the partition directory.
+    *
+    * The write carries the manifest's row and null counts as an
+    * observation; once it succeeds they are recorded for this
+    * (`df`, returned path) pair, so [[Manifest.forWrittenFile]] needs
+    * no second pass over the data.
     */
   def write(
       spark: SparkSession,
@@ -32,22 +37,24 @@ object BronzeWriter {
       partitionValue: String,
       singleFile: Boolean = true): String = {
     val partDir = s"${cfg.baseDir}/${cfg.table}/${cfg.partitionKey}=$partitionValue"
-    val out = if (singleFile) df.coalesce(1) else df
-    val writer = out.write.mode("overwrite")
-    cfg.format match {
-      case "csv" =>
-        writer
-          .option("sep", ";")
-          .option("header", "true")
-          .option("encoding", "UTF-8")
-          .option("nullValue", "")
-          .option("emptyValue", "")
-          .option("lineSep", "\n")
-          .csv(partDir)
-      case "parquet" => writer.parquet(partDir)
-      case other => throw new IllegalArgumentException(s"unsupported bronze format: $other")
+    Manifest.observedWrite(df) { observed =>
+      val out = if (singleFile) observed.coalesce(1) else observed
+      val writer = out.write.mode("overwrite")
+      cfg.format match {
+        case "csv" =>
+          writer
+            .option("sep", ";")
+            .option("header", "true")
+            .option("encoding", "UTF-8")
+            .option("nullValue", "")
+            .option("emptyValue", "")
+            .option("lineSep", "\n")
+            .csv(partDir)
+        case "parquet" => writer.parquet(partDir)
+        case other => throw new IllegalArgumentException(s"unsupported bronze format: $other")
+      }
+      if (singleFile) renameSinglePart(spark, partDir, cfg.fileName) else partDir
     }
-    if (singleFile) renameSinglePart(spark, partDir, cfg.fileName) else partDir
   }
 
   /** Spark names its output `part-*`; the reference names files

@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import graft.SparkSpec
+import graft.{JobCount, SparkSpec}
 import graft.config.PipelineConfig
+import graft.meta.{DatasetInfo, Manifest}
 import graft.sources.{ApiSource, ApiTransport, FixtureTransport, HttpStatusError}
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 class ApiIngestionSpec extends SparkSpec {
 
@@ -119,5 +120,56 @@ class ApiIngestionSpec extends SparkSpec {
       ApiSource.safeGet(dead, "u", Map.empty, 1, retries = 1, sleep = _ => ())
     }
     assert(e.getMessage.contains("after 2 attempts"))
+  }
+
+  private def manifestOf(res: IngestionResult): String =
+    new String(Files.readAllBytes(Paths.get(res.dataFile + ".manifest.json")), "UTF-8")
+
+  test("run: seven jobs, and both manifests equal the ones built from tableStats scans") {
+    val tmp = Files.createTempDirectory("graft-api-eq")
+    val (uf, pf) = writeFixtures(tmp)
+    val transport = new FixtureTransport(Map(
+      "https://api.test/users" -> uf, "https://api.test/posts" -> pf))
+    val (usersCfg, postsCfg) = cfgs(tmp.resolve("bronze").toString)
+    val (res, jobs) = JobCount(spark)(ApiIngestion.run(spark, usersCfg, postsCfg, transport,
+      targetName = "Kurtis Weissnat", runId = "run-eq", clock = clock))
+    // users schema inference, user lookup, posts schema inference,
+    // then a write and a preview per table
+    assert(jobs === 7)
+
+    // the reference path: frames BronzeWriter did not write get a scan
+    val users = ApiIngestion.fetchUsers(spark, usersCfg, transport)
+    val posts = ApiIngestion.fetchPostsByUserId(spark, postsCfg, transport, res.targetUserId)
+    for ((df, c, key, extra, out) <- Seq(
+        (users, usersCfg, "users", Map.empty[String, String], res.users),
+        (posts, postsCfg, "posts", Map("user_id" -> "7"), res.posts))) {
+      val info = DatasetInfo(c.datasetId, c.origin, ";", "UTF-8", c.sink.partitionKey, "20251020",
+        "run-eq", "graft", Some(s"https://api.test/$key"))
+      val reference = Manifest.forWrittenFile(spark, df, out.dataFile, info, extra = extra, clock = clock)
+      assert((reference.schemaStats.rows, reference.schemaStats.nullCounts) === Manifest.tableStats(df))
+      assert(reference.schemaStats.preview === df.limit(3).toJSON.collect().toSeq)
+      assert(manifestOf(out) === Manifest.toJson(reference), key)
+    }
+  }
+
+  test("a target user with no posts: finishes and records zero posts") {
+    val tmp = Files.createTempDirectory("graft-api-noposts")
+    val (uf, pf) = writeFixtures(tmp)
+    val users = tmp.resolve("users-more.json")
+    Files.write(users, new String(Files.readAllBytes(Paths.get(uf)), "UTF-8")
+      .replace("\n]", ",\n{\"id\": 3, \"name\": \"Clementine Bauch\", \"username\": \"Samantha\", \"email\": \"c@x.io\"}\n]")
+      .getBytes("UTF-8"))
+    val transport = new FixtureTransport(Map(
+      "https://api.test/users" -> users.toString, "https://api.test/posts" -> pf))
+    val (usersCfg, postsCfg) = cfgs(tmp.resolve("bronze").toString)
+    val (res, jobs) = JobCount(spark)(ApiIngestion.run(spark, usersCfg, postsCfg, transport,
+      targetName = "Clementine Bauch", runId = "run-none", clock = clock))
+    assert(jobs === 7) // as with posts: the empty write's counts were observed, not scanned
+    assert(res.targetUserId === 3L)
+    assert(res.users.rows === 3)
+    assert(res.posts.rows === 0)
+    assert(manifestOf(res.posts).contains("\"linhas\": 0"))
+    assert(new String(Files.readAllBytes(Paths.get(res.posts.dataFile)), "UTF-8") ===
+      "user_id;post_id;titulo;conteudo\n")
   }
 }

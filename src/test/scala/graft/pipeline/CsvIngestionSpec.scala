@@ -1,9 +1,11 @@
 package graft.pipeline
 
-import graft.SparkSpec
+import graft.{JobCount, SparkSpec}
 import graft.config.PipelineConfig
+import graft.meta.{DatasetInfo, Manifest}
+import graft.sink.BronzeWriter
 import graft.validate.SchemaError
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** End-to-end CSV pipeline test on a fixture shaped like the
   * reference's input (reference data-lake/temp/IBC_municipios_...csv:
@@ -99,5 +101,90 @@ class CsvIngestionSpec extends SparkSpec {
     val (df, extras) = CsvIngestion.prepare(spark, c)
     assert(extras === Seq("Surprise"))
     assert(df.columns.contains("Surprise"))
+  }
+
+  private def manifestOf(res: IngestionResult): String =
+    new String(Files.readAllBytes(Paths.get(res.dataFile + ".manifest.json")), "UTF-8")
+
+  private def info(c: PipelineConfig, runId: String) = DatasetInfo(
+    datasetId = c.datasetId, origin = c.origin, delimiter = ";", encoding = "UTF-8",
+    partitionKey = c.sink.partitionKey, partitionValue = "20251020", runId = runId,
+    producer = "graft")
+
+  test("run: three jobs, and the manifest equals the one built from a tableStats scan") {
+    val tmp = Files.createTempDirectory("graft-csv-eq")
+    val c = cfg(writeFixture(tmp), tmp.resolve("bronze").toString)
+    val (res, jobs) = JobCount(spark)(CsvIngestion.run(spark, c, runId = "run-eq", clock = clock))
+    assert(jobs === 3) // header read, bronze write, preview
+
+    // the reference path: a frame BronzeWriter did not write gets a scan
+    val (fresh, _) = CsvIngestion.prepare(spark, c)
+    val reference = Manifest.forWrittenFile(spark, fresh, res.dataFile, info(c, "run-eq"), clock = clock)
+    assert((reference.schemaStats.rows, reference.schemaStats.nullCounts) === Manifest.tableStats(fresh))
+    assert(reference.schemaStats.preview === fresh.limit(3).toJSON.collect().toSeq)
+    assert(manifestOf(res) === Manifest.toJson(reference))
+  }
+
+  test("the traced composition: forWrittenFile after BronzeWriter.write runs one job") {
+    val tmp = Files.createTempDirectory("graft-csv-compose")
+    val c = cfg(writeFixture(tmp), tmp.resolve("bronze").toString)
+    val (cleaned, _) = CsvIngestion.prepare(spark, c)
+    val dataFile = BronzeWriter.write(spark, cleaned, c.sink, "20251020")
+    val (m, jobs) = JobCount(spark)(
+      Manifest.forWrittenFile(spark, cleaned, dataFile, info(c, "run-c"), clock = clock))
+    assert(jobs === 1) // the preview
+    assert(m.schemaStats.rows === 4L)
+    assert(m.schemaStats.nullCounts ===
+      Map("ano" -> 0L, "codigo_municipio" -> 1L, "municipio" -> 0L, "densidade" -> 1L))
+  }
+
+  test("showPreview before the write leaves the manifest counts exact") {
+    val tmp = Files.createTempDirectory("graft-csv-show")
+    val c = cfg(writeFixture(tmp), tmp.resolve("bronze").toString)
+    // preview_limit 2 < 4 rows: the preview action scans part of the frame
+    val res = CsvIngestion.run(spark, c.copy(previewLimit = 2), runId = "run-show", clock = clock,
+      showPreview = true)
+    assert(res.rows === 4)
+    assert(manifestOf(res).contains("\"linhas\": 4"))
+    assert(manifestOf(res).contains("\"densidade\": 1"))
+  }
+
+  test("header-only CSV: finishes and records zero rows") {
+    val tmp = Files.createTempDirectory("graft-csv-empty")
+    val f = tmp.resolve("empty.csv")
+    Files.write(f, "\uFEFFAno;Código Município;Município;Densidade\n".getBytes("UTF-8"))
+    val (res, jobs) = JobCount(spark)(CsvIngestion.run(spark,
+      cfg(f.toString, tmp.resolve("bronze").toString), runId = "run-empty", clock = clock))
+    assert(jobs === 3) // as with rows: the empty write's counts were observed, not scanned
+    assert(res.rows === 0)
+    val json = manifestOf(res)
+    assert(json.contains("\"linhas\": 0"))
+    assert(json.contains("\"densidade\": 0"))
+  }
+
+  test("IBC-shaped fixture through the shipped config: generator's rows and null counts") {
+    val tmp = Files.createTempDirectory("graft-csv-ibc")
+    val input = tmp.resolve("ibc.csv")
+    val facts = IbcFixture.write(input, seed = 20251020L, rows = 400)
+    val shipped = PipelineConfig.fromJsonFile("configs/indicadores_municipios.json")
+    val c = shipped.copy(
+      csv = shipped.csv.map(_.copy(path = input.toString)),
+      sink = shipped.sink.copy(baseDir = tmp.resolve("bronze").toString))
+    val res = CsvIngestion.run(spark, c, runId = "run-ibc", clock = clock)
+    assert(res.rows === facts.rows)
+    assert(res.undeclaredColumns.isEmpty)
+
+    val js = new com.fasterxml.jackson.databind.ObjectMapper().readTree(manifestOf(res))
+    val stats = js.get("schema_stats")
+    assert(stats.get("linhas").asLong === facts.rows)
+    IbcFixture.Columns.foreach(col => assert(stats.get("nulos").get(col).asLong === facts.nulls(col), col))
+    assert(facts.nulls("cobertura_area_agricultavel") > facts.rows / 2)
+
+    // each hazard parsed, not just counted
+    val (df, _) = CsvIngestion.prepare(spark, c)
+    def byCode(code: String) = df.filter(df("codigo_municipio") === code).head()
+    assert(byCode(facts.thousandsRow._1).getAs[Double]("densidade_smp") === facts.thousandsRow._2)
+    assert(byCode(facts.bareRow._1).getAs[Double]("hhi_smp") === facts.bareRow._2)
+    assert(byCode(facts.quotedRow._1).getAs[String]("municipio") === facts.quotedRow._2)
   }
 }
