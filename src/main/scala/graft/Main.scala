@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.config.PipelineConfig
 import graft.pipeline.{ApiIngestion, CsvIngestion, TargetUserNotFound}
 import graft.sources.{ApiError, FixtureTransport, HttpTransport}
@@ -23,22 +22,8 @@ object Main {
 
   def run(args: Array[String]): Int = {
     if (args.length < 2) { usage(); return 2 }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${Runtime.getRuntime.availableProcessors()}]"))
-      .appName("graft-ingestion")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark 4.1's unionOutputPartitioning (default on) lets UnionExec
-      // ADVERTISE its children's common hash partitioning while the
-      // union RDD physically has the SUM of their partitions — a
-      // downstream co-partitioned join then zips 32-vs-64 partition
-      // RDDs and fails (observed on q319 once the table loader hash-
-      // partitions embeddings); an aggregate could silently duplicate
-      // split keys. Off = the pre-4.1 Unknown partitioning, which
-      // re-inserts the exchange EnsureRequirements always added.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session(Graft.Ingest,
+      deploy = sys.env.get("SPARK_MASTER").map("spark.master" -> _).toMap)
     try {
       args(0) match {
         case "csv" =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,25 +8,8 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val split = if (args.length > 1) args(1) else "1m"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark 4.1's unionOutputPartitioning (default on) lets UnionExec
-      // ADVERTISE its children's common hash partitioning while the
-      // union RDD physically has the SUM of their partitions — a
-      // downstream co-partitioned join then zips 32-vs-64 partition
-      // RDDs and fails (observed on q319 once the table loader hash-
-      // partitions embeddings); an aggregate could silently duplicate
-      // split keys. Off = the pre-4.1 Unknown partitioning, which
-      // re-inserts the exchange EnsureRequirements always added.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.files.maxPartitionBytes", split)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts is TIMESTAMP(NANOS)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session(Graft.Suite)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", split)
 
     def time(label: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime()
@@ -123,112 +105,6 @@ object Profile {
           time(s"$name cold")(noop(fn(spark, sfDir)))
           time(s"$name warm")(noop(fn(spark, sfDir)))
         }
-      spark.stop()
-      return
-    }
-    // exact (q273 regime, k~sqrt(n)) vs pruned (q304 regime, k~n^1/4)
-    // SemDeDup drop-set recall at the given sfDir (dev scratch — the
-    // SCALE.md exact-vs-pruned row on the 64x replica)
-    if (args.length > 2 && args(2) == "semdedupRecall") {
-      val fv = graft.queries.QueryDef.table(spark, sfDir, "embeddings")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      val n = fv.count().toDouble
-      val kExact = math.max(8L, math.ceil(math.sqrt(n)).toLong)
-      val kPruned = math.max(8L, math.ceil(math.sqrt(math.ceil(math.sqrt(n)))).toLong)
-      def cents(k: Long) = fv.filter(col("vec_id") < k)
-        .select(col("vec_id").as("cell"), col("v").as("cv"))
-      // ONE n×kExact assignment serves both same-quantizer variants
-      // (the FromAssignment split exists exactly for this)
-      val asgE = graft.ops.Dedup
-        .assignCellsWithDist(fv, cents(kExact), "vec_id", "v").localCheckpoint()
-      val exactDrops = graft.ops.Dedup
-        .semanticDupPairsFromAssignment(fv, asgE.select("vec_id", "cell"),
-          "vec_id", "v", tau = 0.35)
-        .select(col("j2").as("d")).distinct().localCheckpoint()
-      val prunedDrops = graft.ops.Dedup
-        .semanticDupPairsPruned(fv, cents(kPruned), "vec_id", "v", tau = 0.35)
-        .select(col("drop_id").as("d")).distinct().localCheckpoint()
-      // same-quantizer variant isolates the pruning effect from the
-      // coarser k the linear regime affords
-      val prunedSameK = graft.ops.Dedup
-        .semanticDupPairsPrunedFromAssignment(fv, asgE, "vec_id", "v", tau = 0.35)
-        .select(col("drop_id").as("d")).distinct().localCheckpoint()
-      val ne = exactDrops.count(); val np = prunedDrops.count()
-      val nsk = prunedSameK.count()
-      val inter = prunedDrops.join(exactDrops, "d").count()
-      val interSk = prunedSameK.join(exactDrops, "d").count()
-      println(f"[profile] semdedup n=${n.toLong} kExact=$kExact kPruned=$kPruned " +
-        f"exactDrops=$ne prunedDrops=$np overlap=$inter " +
-        f"recallVsExact=${inter.toDouble / math.max(1L, ne)}%.3f " +
-        f"prunedSameK=$nsk overlapSameK=$interSk " +
-        f"recallSameK=${interSk.toDouble / math.max(1L, ne)}%.3f")
-      spark.stop()
-      return
-    }
-    // stage breakdown for the q139 pipeline (dev scratch)
-    if (args.length > 2 && args(2) == "q139parts") {
-      import org.apache.spark.sql.expressions.Window
-      val tok = graft.queries.QueryDef.table(spark, sfDir, "documents")
-        .filter(col("doc_id") % 7 === 0)
-        .select(col("doc_id"),
-          explode(org.apache.spark.sql.functions.split(col("text"), " ")).as("tok"))
-        .distinct()
-      val ord = tok.groupBy("tok").agg(count(lit(1)).as("df"))
-        .withColumn("trank", row_number().over(Window.orderBy(col("df"), col("tok"))))
-      val pos = tok.join(broadcast(ord), "tok")
-        .withColumn("idx",
-          row_number().over(Window.partitionBy("doc_id").orderBy("trank")))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
-      val prefix = pos.filter(col("idx") <= expr("n - ((n * 4 + 4) div 5) + 1"))
-        .select(col("doc_id"), col("tok"), col("idx"), col("n"))
-      val cand = prefix.as("a")
-        .join(prefix.as("b"),
-          col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id") &&
-            col("a.n") * 5 >= col("b.n") * 4 && col("b.n") * 5 >= col("a.n") * 4 &&
-            (least(col("a.idx"), col("b.idx"))
-              + least(col("a.n") - col("a.idx"), col("b.n") - col("b.idx"))) * 9
-              >= (col("a.n") + col("b.n")) * 4)
-        .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-        .distinct()
-      val sets = tok.groupBy("doc_id")
-        .agg(sort_array(collect_list(col("tok"))).as("toks"), count(lit(1)).as("n"))
-      for (r <- 1 to 2) {
-        time(s"tok rep$r")(noop(tok))
-        time(s"ord rep$r")(noop(ord))
-        time(s"pos rep$r")(noop(pos))
-        time(s"prefix rep$r")(noop(prefix))
-        time(s"cand rep$r") { println("cand rows: " + cand.count()) }
-        time(s"sets rep$r")(noop(sets))
-      }
-      spark.stop()
-      return
-    }
-    // stage breakdown for the co-occurrence graph family (dev scratch)
-    if (args.length > 2 && args(2) == "graphparts") {
-      val li2 = graft.queries.QueryDef.table(spark, sfDir, "lineitem")
-      val m = li2.select(col("l_orderkey").as("__g"), col("l_partkey").as("__i")).distinct()
-      val eJoin = m.as("a").join(m.as("b"),
-          col("a.__g") === col("b.__g") && col("a.__i") < col("b.__i"))
-        .select(col("a.__i").as("u"), col("b.__i").as("v"))
-        .distinct()
-      val eBasket = li2
-        .select(col("l_orderkey").as("__g"), col("l_partkey").as("__i"))
-        .groupBy("__g").agg(sort_array(collect_set(col("__i"))).as("is"))
-        .select(posexplode(col("is")).as(Seq("__x", "u")), col("is"))
-        .select(col("u"),
-          explode(slice(col("is"), col("__x") + 2, size(col("is")))).as("v"))
-        .distinct()
-      for (r <- 1 to 2) {
-        time(s"m distinct rep$r")(noop(m))
-        time(s"edges join-form rep$r")(noop(eJoin))
-        time(s"edges basket-form rep$r")(noop(eBasket))
-        time(s"edges join-form pinned rep$r") {
-          graft.ops.Pinned.release(graft.ops.Pinned.pin(eJoin)) }
-        time(s"edges basket-form pinned rep$r") {
-          graft.ops.Pinned.release(graft.ops.Pinned.pin(eBasket)) }
-        time(s"q130 full rep$r")(noop(SparkEntry.queries("q130_triangle_count")(spark, sfDir)))
-        time(s"q132 full rep$r")(noop(SparkEntry.queries("q132_pagerank")(spark, sfDir)))
-      }
       spark.stop()
       return
     }

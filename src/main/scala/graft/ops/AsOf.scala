@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftshim.ColumnShim
-import graft.plans.{AsOfJoin, GraftStrategies, PushFilterThroughAsOfJoin}
+import graft.plans.AsOfJoin
 
 /** User-facing entry for the native as-of join operator
   * (graft.plans.AsOfJoinExec). Mirrors the reference's lookup-latest
@@ -12,22 +12,11 @@ import graft.plans.{AsOfJoin, GraftStrategies, PushFilterThroughAsOfJoin}
   * Column names must be disjoint between the two sides (rename the
   * right side first, as with any Spark self-join) — the node's output
   * is left.output ++ right.output.
+  *
+  * Works on any session: [[graft.Graft.install]] adds the planner
+  * strategy and pushdown rule the node needs.
   */
 object AsOf {
-
-  /** Ensure the planner can translate AsOfJoin on this session.
-    * `spark.experimental.extraStrategies` is the public hook for an
-    * already-running session; new sessions can instead register
-    * `graft.GraftExtensions` via spark.sql.extensions.
-    */
-  private def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(GraftStrategies))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GraftStrategies
-    if (!spark.experimental.extraOptimizations.contains(PushFilterThroughAsOfJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushFilterThroughAsOfJoin
-  }
 
   /** As-of join: for every left row, the right row with equal keys
     * and the greatest `rightTimeCol <= leftTimeCol` (within
@@ -49,7 +38,7 @@ object AsOf {
     require(leftKeys.nonEmpty && leftKeys.length == rightKeys.length,
       "as-of join needs matching non-empty key lists")
     val spark = left.sparkSession
-    ensureStrategy(spark)
+    graft.Graft.install(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan0 = right.queryExecution.analyzed
     // Disjointness must follow the session's resolution rules: under the

@@ -16,8 +16,8 @@ import graft.plans.BandedRangeJoin
   * }}}
   *
   * Unlike the conf-gated optimizer-rule path this touches exactly one
-  * query, so it composes with sessions that did not register
-  * [[graft.GraftExtensions]]. Bin units: epoch micros for timestamp
+  * query, so it composes with sessions [[graft.Graft.install]] never
+  * ran on. Bin units: epoch micros for timestamp
   * domains, the raw value for integer domains.
   */
 object RangeJoin {

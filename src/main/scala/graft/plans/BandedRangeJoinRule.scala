@@ -35,7 +35,7 @@ import org.apache.spark.sql.types._
   * Two entry points:
   *  - as an optimizer rule, gated on `spark.graft.rangeJoin.binSize`
   *    (> 0 enables; units: micros for timestamps, raw value for
-  *    integers) and registered via [[graft.GraftExtensions]] — the
+  *    integers) and installed by [[graft.Graft.install]] — the
   *    user writes the naive declarative join and the engine makes it
   *    scale;
   *  - [[graft.ops.RangeJoin.banded]] applies the same rewrite to one

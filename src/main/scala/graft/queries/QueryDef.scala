@@ -180,10 +180,14 @@ object QueryDef {
     // partition the complete group lives in. REPARTITION_BY_NUM, so
     // AQE never coalesces it and the advertised partitioning is
     // trusted downstream.
-    if (name == "documents")
-      converted.repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-    else if (name == "embeddings")
-      converted.repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
+    //
+    // A union over these hash-partitioned frames needs the union guard
+    // (graft.Graft.install), whatever session the caller built.
+    if (name == "documents" || name == "embeddings") {
+      graft.Graft.install(spark)
+      converted.repartition(spark.sparkContext.defaultParallelism,
+        col(if (name == "documents") "doc_id" else "vec_id"))
+    }
     else converted
   }
 }

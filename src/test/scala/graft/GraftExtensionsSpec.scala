@@ -6,7 +6,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
 
   test("custom expressions are callable from SQL after registration") {
     val spark = SparkSpec.session
-    GraftExtensions.register(spark)
+    Graft.install(spark)
     val row = spark.sql(
       """SELECT simhash64(split('a b c', ' ')) = simhash64(split('a b c', ' ')) AS eq,
         |       cosine_sim(array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE)),
@@ -21,8 +21,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
 
   test("registration is idempotent") {
     val spark = SparkSpec.session
-    GraftExtensions.register(spark)
-    GraftExtensions.register(spark)
+    Graft.install(spark)
+    Graft.install(spark)
     assert(spark.sql("SELECT simhash64(array('x'))").head().getLong(0) ===
       spark.sql("SELECT simhash64(array('x'))").head().getLong(0))
   }

@@ -91,7 +91,7 @@ class AHashSpec extends SparkSpec {
   }
 
   test("registered SQL function resolves") {
-    graft.GraftExtensions.register(spark)
+    graft.Graft.install(spark)
     assert(spark.sql("SELECT ahash60('z') = ahash60('z') AS eq")
       .collect().head.getBoolean(0))
   }

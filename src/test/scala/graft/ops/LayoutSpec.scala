@@ -152,7 +152,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("hilbert_index SQL function matches the Column API and the scalar walk") {
-    graft.GraftExtensions.register(spark)
+    graft.Graft.install(spark)
     val rows = spark.range(0, 4096L)
       .selectExpr("id div 64 AS x", "id % 64 AS y")
       .selectExpr("x", "y", "hilbert_index(x, y, 6) AS h")

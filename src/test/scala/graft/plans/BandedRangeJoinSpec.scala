@@ -96,9 +96,7 @@ class BandedRangeJoinSpec extends SparkSpec {
   }
 
   test("conf-gated optimizer rule rewrites the declarative join automatically") {
-    if (!spark.experimental.extraOptimizations.contains(BandedRangeJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ BandedRangeJoin
+    graft.Graft.install(spark)
     withAutoBroadcastOff {
       try {
         spark.conf.set(BandedRangeJoin.BinSizeConf, "64")
@@ -200,9 +198,7 @@ class BandedRangeJoinSpec extends SparkSpec {
   }
 
   test("conf-gated rule also fires for the overlap shape") {
-    if (!spark.experimental.extraOptimizations.contains(BandedRangeJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ BandedRangeJoin
+    graft.Graft.install(spark)
     withAutoBroadcastOff {
       try {
         spark.conf.set(BandedRangeJoin.BinSizeConf, "100")
